@@ -4,8 +4,9 @@ Re-expresses the reference's trade generator semantics
 (reference producer.py:11-128: weighted categoricals producer.py:39,
 per-class quantity/price ranges producer.py:62-76, derived
 notional/fees producer.py:78-84, T+N settlement producer.py:89-97,
-priority/STP rules producer.py:100-105) as pure Spark column
-expressions over ``spark.range(n)``.
+priority/STP rules producer.py:100-105) as a projection over
+``spark.range(n)`` written as SQL expression text, one ``selectExpr``
+per dependency layer, so the JVM parses each layer in one call.
 
 Two deliberate departures from the reference, both scale-driven:
 
@@ -15,7 +16,7 @@ Two deliberate departures from the reference, both scale-driven:
    task order, or retries. That's what makes the generator safe on a
    1000-executor cluster (speculative re-execution produces identical
    rows) and makes golden tests possible.
-2. **Declarative.** One ``range(n)`` + column expressions = a lazy plan
+2. **Declarative.** One ``range(n)`` + SQL expressions = a lazy plan
    Catalyst can parallelize arbitrarily; generating 100 TB of synthetic
    trades is embarrassingly parallel with zero Python in the loop
    (whole-stage codegen end to end).
@@ -26,7 +27,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_streaming_system_with_apache_kafka_spark.schemas import TRADE_SCHEMA
@@ -85,49 +86,65 @@ ANALYSTS = [
 _MASK = 1 << 30
 
 
-def _u01(seed: int, tag: str) -> Column:
+def _str(s: str) -> str:
+    """SQL string literal, quotes and backslashes escaped."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _dbl(x: float) -> str:
+    """SQL double literal: a bare ``50.0`` parses as DECIMAL, ``50.0D``
+    as the exact double the Python float holds."""
+    return f"{float(x)!r}D"
+
+
+def _hash(seed: int, tag: str) -> str:
+    return f"xxhash64(id, {int(seed)}, {_str(tag)})"
+
+
+def _u01(seed: int, tag: str) -> str:
     """Uniform [0,1) derived from (row id, seed, tag) — row-deterministic
-    regardless of partitioning, unlike ``F.rand(seed)``."""
-    return F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit(tag)), F.lit(_MASK)) / _MASK
+    regardless of partitioning, unlike ``rand(seed)``."""
+    return f"(pmod({_hash(seed, tag)}, {_MASK}) / {_MASK})"
 
 
-def _choice(options: list[str], seed: int, tag: str) -> Column:
-    arr = F.array(*[F.lit(o) for o in options])
-    return F.element_at(arr, (F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit(tag)), F.lit(len(options))) + 1).cast("int"))
+def _choice(options: list[str], seed: int, tag: str) -> str:
+    arr = ", ".join(map(_str, options))
+    return f"element_at(array({arr}), CAST(pmod({_hash(seed, tag)}, {len(options)}) + 1 AS INT))"
 
 
-def _weighted_choice(options: list[str], weights: list[float], seed: int, tag: str) -> Column:
-    """Cumulative-weight when-ladder (producer.py:58 random.choices)."""
+def _weighted_choice(options: list[str], weights: list[float], seed: int, tag: str) -> str:
+    """Cumulative-weight CASE ladder (producer.py:58 random.choices)."""
     u = _u01(seed, tag)
-    cutoffs: list[tuple[float, str]] = []
-    cum = 0.0
+    whens, cum = [], 0.0
     for opt, w in zip(options[:-1], weights[:-1]):
         cum += w
-        cutoffs.append((cum, opt))
-    result = F.lit(options[-1])
-    for cum, opt in reversed(cutoffs):
-        result = F.when(u < cum, F.lit(opt)).otherwise(result)
-    return result
+        whens.append(f"WHEN {u} < {_dbl(cum)} THEN {_str(opt)}")
+    return f"CASE {' '.join(whens)} ELSE {_str(options[-1])} END"
 
 
-def _randint(seed: int, tag: str) -> Column:
+def _by_class(values: dict[str, str]) -> str:
+    """Per-asset-class value; NULL for an unknown class."""
+    whens = " ".join(f"WHEN {_str(cls)} THEN {v}" for cls, v in values.items())
+    return f"CASE asset_class {whens} END"
+
+
+def _randint(seed: int, tag: str) -> str:
     """Per-class integer uniform in [lo, hi] (producer.py randint)."""
     u = _u01(seed, tag)
-    result = F.lit(None)
-    for cls, (lo, hi, *_rest) in RANGES.items():
-        val = (F.floor(u * (hi - lo + 1)) + lo).cast("long")
-        result = F.when(F.col("asset_class") == cls, val).otherwise(result)
-    return result
+    return _by_class(
+        {cls: f"CAST(FLOOR({u} * {hi - lo + 1}) + {lo} AS BIGINT)" for cls, (lo, hi, *_) in RANGES.items()}
+    )
 
 
-def _randprice(seed: int, tag: str) -> Column:
+def _randprice(seed: int, tag: str) -> str:
     """Per-class uniform price rounded to the class's decimal places."""
     u = _u01(seed, tag)
-    result = F.lit(None)
-    for cls, (_, _, lo, hi, dp) in RANGES.items():
-        val = F.round(F.lit(lo) + u * (hi - lo), dp)
-        result = F.when(F.col("asset_class") == cls, val).otherwise(result)
-    return result
+    return _by_class(
+        {
+            cls: f"ROUND({_dbl(lo)} + {u} * {_dbl(hi - lo)}, {dp})"
+            for cls, (_, _, lo, hi, dp) in RANGES.items()
+        }
+    )
 
 
 def trades(
@@ -159,85 +176,56 @@ def decorate_ids(
     derives from (id, seed) alone, so the SAME id produces the SAME
     trade in batch and streaming — the property the stream/batch
     equivalence tests and the soak's redelivery injection rely on."""
-    df = df.withColumn("asset_class", _choice(ASSET_CLASSES, seed, "class"))
-
-    # Per-class instrument pick (producer.py:55).
-    instrument = F.lit(None)
-    for cls, ticks in INSTRUMENTS.items():
-        instrument = F.when(
-            F.col("asset_class") == cls, _choice(ticks, seed, f"instr_{cls}")
-        ).otherwise(instrument)
-
-    quantity = _randint(seed, "qty")
-    price = _randprice(seed, "price")
-
-    df = (
-        df.withColumn("instrument", instrument)
-        .withColumn("side", _choice(SIDES, seed, "side"))
-        .withColumn("counterparty", _choice(COUNTERPARTIES, seed, "cpty"))
-        .withColumn("status", _weighted_choice(STATUSES, STATUS_WEIGHTS, seed, "status"))
-        .withColumn("settlement_venue", _choice(VENUES, seed, "venue"))
-        .withColumn("quantity", quantity)
-        .withColumn("price", price)
-    )
-
-    notional = F.round(F.col("quantity") * F.col("price"), 2)
-    df = df.withColumn("notional_value", notional)
-
-    def fee(tag: str, lo: float, hi: float) -> Column:
-        return F.round(F.col("notional_value") * (F.lit(lo) + _u01(seed, tag) * (hi - lo)), 2)
-
-    df = (
-        df.withColumn("brokerage_fee", fee("fee_brk", 0.0001, 0.0015))  # producer.py:81
-        .withColumn("clearing_fee", fee("fee_clr", 0.00005, 0.0003))  # producer.py:82
-        .withColumn("exchange_fee", fee("fee_exc", 0.00003, 0.0002))  # producer.py:83
-    )
-    df = df.withColumn(
-        "total_fees",
-        F.round(F.col("brokerage_fee") + F.col("clearing_fee") + F.col("exchange_fee"), 2),
-    )
-
-    days_back = F.pmod(F.xxhash64(F.col("id"), F.lit(seed), F.lit("tdate")), F.lit(4)).cast("int")
-    df = df.withColumn("trade_date", F.date_sub(F.lit(base_date), days_back))
-
-    settle = F.lit(None)
-    for cls, n in SETTLEMENT_DAYS.items():
-        settle = F.when(F.col("asset_class") == cls, F.date_add(F.col("trade_date"), n)).otherwise(settle)
-    df = df.withColumn("settlement_date", settle)
-
-    df = df.withColumn(
-        "priority",
-        F.when(
-            F.col("status").contains("Break") | (F.col("notional_value") > 1_000_000),
-            "High",
-        ).otherwise("Normal"),  # producer.py:100-102
-    ).withColumn(
-        "stp_eligible",
-        ~F.col("status").isin("Break - Mismatch", "Break - Missing Trade"),  # producer.py:105
-    )
-
     base_us = int(
         dt.datetime.combine(base_date, dt.time(9, 30)).replace(tzinfo=dt.timezone.utc).timestamp()
         * 1_000_000
     )
-    jitter_us = F.pmod(
-        F.xxhash64(F.col("id"), F.lit(seed), F.lit("jitter")), F.lit(mean_interval_ms * 1000)
+    step_us = mean_interval_ms * 1000
+    df = df.selectExpr("id", f"{_choice(ASSET_CLASSES, seed, 'class')} AS asset_class")
+    df = df.selectExpr(
+        "*",
+        # Per-class instrument pick (producer.py:55).
+        _by_class({cls: _choice(ticks, seed, f"instr_{cls}") for cls, ticks in INSTRUMENTS.items()})
+        + " AS instrument",
+        f"{_choice(SIDES, seed, 'side')} AS side",
+        f"{_choice(COUNTERPARTIES, seed, 'cpty')} AS counterparty",
+        f"{_weighted_choice(STATUSES, STATUS_WEIGHTS, seed, 'status')} AS status",
+        f"{_choice(VENUES, seed, 'venue')} AS settlement_venue",
+        f"{_randint(seed, 'qty')} AS quantity",
+        f"{_randprice(seed, 'price')} AS price",
+        f"date_sub(DATE'{base_date.isoformat()}', CAST(pmod({_hash(seed, 'tdate')}, 4) AS INT))"
+        " AS trade_date",
+        f"timestamp_micros({base_us} + id * {step_us} + pmod({_hash(seed, 'jitter')}, {step_us}))"
+        " AS `timestamp`",
+        f"substring(md5(concat_ws('#', {int(seed)}, id)), 1, 12) AS trade_id",
+        f"{_choice(ANALYSTS, seed, 'analyst')} AS processed_by",
     )
-    df = df.withColumn(
-        "timestamp",
-        F.timestamp_micros(
-            F.lit(base_us) + F.col("id") * (mean_interval_ms * 1000) + jitter_us
-        ),
+    df = df.selectExpr(
+        "*",
+        "ROUND(quantity * price, 2) AS notional_value",
+        _by_class({cls: f"date_add(trade_date, {n})" for cls, n in SETTLEMENT_DAYS.items()})
+        + " AS settlement_date",
+        # producer.py:105
+        "NOT status IN ('Break - Mismatch', 'Break - Missing Trade') AS stp_eligible",
     )
 
-    df = df.withColumn(
-        "trade_id", F.substring(F.md5(F.concat_ws("#", F.lit(seed), F.col("id"))), 1, 12)
-    ).withColumn("processed_by", _choice(ANALYSTS, seed, "analyst"))
+    def fee(name: str, tag: str, lo: float, hi: float) -> str:
+        u = _u01(seed, tag)
+        return f"ROUND(notional_value * ({_dbl(lo)} + {u} * {_dbl(hi - lo)}), 2) AS {name}"
 
+    df = df.selectExpr(
+        "*",
+        fee("brokerage_fee", "fee_brk", 0.0001, 0.0015),  # producer.py:81
+        fee("clearing_fee", "fee_clr", 0.00005, 0.0003),  # producer.py:82
+        fee("exchange_fee", "fee_exc", 0.00003, 0.0002),  # producer.py:83
+        "CASE WHEN contains(status, 'Break') OR notional_value > 1000000"  # producer.py:100-102
+        " THEN 'High' ELSE 'Normal' END AS priority",
+    )
+    df = df.selectExpr("*", "ROUND(brokerage_fee + clearing_fee + exchange_fee, 2) AS total_fees")
     # Project to the canonical schema order/types (single declaration,
     # unlike the reference's three copies — SURVEY.md §1.2).
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in TRADE_SCHEMA.fields]
+    return df.selectExpr(
+        *[f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`" for f in TRADE_SCHEMA.fields]
     )
 
 

@@ -340,6 +340,11 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             lo = 0
             while lo < len(q64):
                 mx = int(np.abs(q64[lo : lo + 16384]).max(initial=1))
+                # Out-of-contract magnitudes would wrap int64 silently.
+                if mx * mx >= (1 << 62):
+                    raise ValueError(
+                        f"quantized |q|={mx}: |q|^2 exceeds the exact int64 Gram range 2^62"
+                    )
                 step = max(1, min(16384, (1 << 62) // (mx * mx)))
                 sub = q64[lo : lo + step]
                 lo += step
@@ -705,20 +710,21 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates its buckets produced, the closest bench vector, and
     that cosine.
 
-    Scale shape (r10): the benchmark suite is the SMALL side — its
-    bucket index ({N_TABLES}x{N_PLANES + 1} multi-probe keys per
-    vector, IDS ONLY) broadcasts, so the training corpus never
-    shuffles through the join. Collisions dedup in ONE aggregation
-    keyed by train_id (collect_set of bench ids — a pair hit via
-    several tables/probes enters the set once), the ONLY exchange in
-    the plan; its payload is the training embedding once per
-    candidate-bearing train vector plus the id set, instead of r9's
-    two payload-free exchanges + per-collision re-scoring. The Arrow
+    Scale shape: the benchmark suite is the SMALL side — its bucket
+    index ({N_TABLES}x{N_PLANES + 1} multi-probe keys per vector, IDS
+    ONLY) broadcasts, so the training corpus never shuffles through
+    the join. Collisions dedup in ONE aggregation keyed by train_id
+    (collect_set of bench ids — a pair hit via several tables/probes
+    enters the set once); its payload is the training embedding once
+    per candidate-bearing train vector plus the id set. The Arrow
     cosine kernel then scores each DISTINCT (train, bench) pair
     exactly once — the bench embedding re-attaches map-side from a
-    second, fan-out-free broadcast — and the best-candidate pick is a
-    max_by aggregate that reuses the train_id partitioning (no second
-    exchange, no sort). Values identical: cos is a deterministic
+    second, fan-out-free broadcast. The best-candidate pick is a
+    row_number window (cos desc, bench_id asc) behind a SECOND
+    train_id exchange: ArrowEvalPython resets its child's output
+    partitioning, so the window cannot reuse the aggregation's; that
+    exchange carries scalars only (train_id, count, bench_id, cos),
+    never an embedding. Values identical: cos is a deterministic
     function of (te, be), so score-after-dedup equals
     first-over-duplicate-scores. The corpus-sized LSH signature pass
     is one Arrow batch matmul."""
@@ -772,12 +778,13 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(bench_emb), "bench_id")
         .withColumn("cos", cosine(F.col("te"), F.col("be")))
     )
-    # Best candidate per train vector: the r9 window pick
-    # (cos desc, bench_id asc), which reuses the aggregation's
-    # hashpartitioning(train_id) — one local sort, no exchange.
+    # Best candidate per train vector: a window pick (cos desc,
+    # bench_id asc). It re-exchanges on train_id, because
+    # ArrowEvalPython (the cosine kernel) resets the aggregation's
+    # output partitioning; the exchanged rows carry no embedding.
     # (A max_by(struct) aggregate was measured first: its struct
     # buffer falls back to SortAggregate and EnsureRequirements adds
-    # a second exchange for the widened grouping key — strictly worse.)
+    # an exchange for the widened grouping key — strictly worse.)
     w = Window.partitionBy("train_id").orderBy(
         F.col("cos").desc(), F.col("bench_id")
     )

@@ -19,10 +19,27 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """About 60% of the host's MemTotal, capped at 24g (the cap when
+    ``/proc/meminfo`` is unreadable)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(DRIVER_MEM_CAP_MB, kb * 6 // 10 // 1024)}m"
 
 
 def get_session(app_name: str = "rtss_spark", cpus: str | None = None) -> SparkSession:
-    """Build (or reuse) the SparkSession with scale-appropriate defaults."""
+    """Build (or reuse) the SparkSession with scale-appropriate defaults.
+
+    Driver memory is ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    :func:`default_driver_memory` — about 60% of physical memory, capped
+    at 24g, so the default never exceeds the machine it runs on.
+    """
     cpus = cpus or DEFAULT_CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -33,7 +50,7 @@ def get_session(app_name: str = "rtss_spark", cpus: str | None = None) -> SparkS
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -8,6 +8,7 @@
   environment ships ``spark-sql-kafka-0-10`` and a broker at
   localhost:9092; otherwise it reports SKIPPED, which is the
   documented state for this container.
+- The default driver heap fits the host it runs on.
 """
 
 from __future__ import annotations
@@ -17,7 +18,15 @@ import socket
 import pytest
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.session import default_driver_memory
 from real_time_streaming_system_with_apache_kafka_spark.sources.tables import load
+
+
+def test_default_driver_memory_fits_host():
+    mb = int(default_driver_memory().removesuffix("m"))
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    assert 0 < mb <= min(24 * 1024, total_kb * 0.6 / 1024)
 
 
 def test_non_utc_driver_session_is_repinned(spark, sf_dir):
