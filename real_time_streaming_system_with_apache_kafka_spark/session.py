@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
 DRIVER_MEM_CAP_MB = 24 * 1024
 
 
@@ -35,6 +35,9 @@ def default_driver_memory() -> str:
 
 def get_session(app_name: str = "rtss_spark", cpus: str | None = None) -> SparkSession:
     """Build (or reuse) the SparkSession with scale-appropriate defaults.
+
+    Cores are ``cpus`` when given, else ``SPARK_GRAFT_CPUS``, else the
+    host's CPU count.
 
     Driver memory is ``SPARK_GRAFT_DRIVER_MEM`` when set, else
     :func:`default_driver_memory` — about 60% of physical memory, capped

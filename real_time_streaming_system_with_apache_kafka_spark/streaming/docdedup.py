@@ -25,8 +25,13 @@ from real_time_streaming_system_with_apache_kafka_spark.operators.curation impor
     gopher_rule_columns,
 )
 from real_time_streaming_system_with_apache_kafka_spark.operators.dedup import simhash16
+from real_time_streaming_system_with_apache_kafka_spark.streaming.ingest import (
+    _ensure_watermark,
+)
 
 DOC_WIRE_SCHEMA = "doc_id long, text string, ingest_ts timestamp"
+# Dedup horizon on ``ingest_ts``: a re-submission within it is dropped.
+DOC_WATERMARK = "10 minutes"
 
 
 def read_document_stream_from_json_dir(spark: SparkSession, path: str) -> DataFrame:
@@ -44,29 +49,27 @@ def read_document_stream_from_json_dir(spark: SparkSession, path: str) -> DataFr
     )
 
 
-def filter_exact_duplicates(docs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def filter_exact_duplicates(docs: DataFrame) -> DataFrame:
     """Online exact dedup: first arrival per content digest survives;
     re-submissions within the watermark horizon are dropped, state for
     older digests is evicted."""
+    hashed = docs.withColumn("content_hash", F.md5("text"))
     return (
-        docs.withColumn("content_hash", F.md5("text"))
-        .withWatermark("ingest_ts", watermark)
+        _ensure_watermark(hashed, "ingest_ts", DOC_WATERMARK)
         .dropDuplicatesWithinWatermark(["content_hash"])
         .drop("content_hash")
     )
 
 
-def filter_near_duplicates(docs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def filter_near_duplicates(docs: DataFrame) -> DataFrame:
     """Online near-dup filter: first arrival per 16-bit SimHash bucket
     survives. Coarser than the batch MinHash pipeline by design — the
     streaming pass is the cheap gate; the batch CC/survivor pass is
     the authoritative one (same split the reference draws between
     consumer-side PK dedup and offline reconciliation)."""
-    return (
-        docs.withColumn("simhash", simhash16(F.col("text")))
-        .withWatermark("ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark(["simhash"])
-    )
+    return _ensure_watermark(
+        docs.withColumn("simhash", simhash16(F.col("text"))), "ingest_ts", DOC_WATERMARK
+    ).dropDuplicatesWithinWatermark(["simhash"])
 
 
 def gate_quality(docs: DataFrame) -> DataFrame:

@@ -36,6 +36,26 @@ from real_time_streaming_system_with_apache_kafka_spark.schemas import (
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+# Event-time watermark delay of the trade stream: how late a redelivery
+# or an out-of-order trade may arrive and still be deduplicated or
+# counted in its window.
+WATERMARK = "2 minutes"
+
+
+def _ensure_watermark(
+    df: DataFrame, column: str = "timestamp", delay: str = WATERMARK
+) -> DataFrame:
+    """Declare the event-time watermark on ``column`` once per query.
+
+    A frame whose ``column`` already carries a watermark (its metadata
+    holds ``spark.watermarkDelayMs``, e.g. the output of
+    :func:`dedup_trades`) is returned as is, so stateful operators can
+    be chained without each one redefining it. On a batch frame the
+    optimizer drops the watermark.
+    """
+    if "spark.watermarkDelayMs" in df.schema[column].metadata:
+        return df
+    return df.withWatermark(column, delay)
 
 
 def enable_rocksdb_state(spark: SparkSession) -> None:
@@ -72,7 +92,7 @@ def parse_wire(raw: DataFrame, value_col: str = "value") -> DataFrame:
     return coerced.filter(F.col("timestamp").isNotNull())
 
 
-def dedup_trades(trades: DataFrame, watermark: str = "2 minutes") -> DataFrame:
+def dedup_trades(trades: DataFrame) -> DataFrame:
     """W4/SNK2: watermark-scoped first-write-wins dedup on trade_id —
     the reference's ``ON CONFLICT (trade_id) DO NOTHING``
     (consumer.py:78) as a streaming operator ahead of any sink.
@@ -84,9 +104,7 @@ def dedup_trades(trades: DataFrame, watermark: str = "2 minutes") -> DataFrame:
     watermark passes, which is the semantics at-least-once Kafka
     redelivery actually needs (duplicates arrive close together).
     """
-    return trades.withWatermark("timestamp", watermark).dropDuplicatesWithinWatermark(
-        ["trade_id"]
-    )
+    return _ensure_watermark(trades).dropDuplicatesWithinWatermark(["trade_id"])
 
 
 def read_trade_stream_from_json_dir(

@@ -16,8 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _is_target_absent(exc) -> bool:
@@ -46,55 +45,63 @@ def _is_target_absent(exc) -> bool:
     return "Path does not exist" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg
 
 
-def start_parquet_append(
-    df: DataFrame, path: str, checkpoint: str, trigger_seconds: int | None = None
-):
+def start_parquet_append(df: DataFrame, path: str, checkpoint: str):
     """SNK1: schema-on-write parquet table with checkpointed
     exactly-once append (replaces CREATE TABLE + row inserts)."""
-    writer = (
+    return (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .start()
     )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+
+
+def _first_write_wins(
+    key_cols: list[str],
+    read_target: Callable[[SparkSession], DataFrame],
+    append: Callable[[DataFrame], None],
+) -> Callable[[DataFrame, int], None]:
+    """The reference's ON CONFLICT DO NOTHING, batch-at-a-time: each
+    batch is de-duplicated within itself, anti-joined against the keys
+    already in the target, and appended. An absent target (first
+    batch) skips the anti-join; any other AnalysisException (a schema
+    mismatch) re-raises so the checkpoint retries the batch instead of
+    appending duplicates. Network and auth errors are not
+    AnalysisExceptions and propagate anyway."""
+
+    def upsert(batch: DataFrame, epoch_id: int) -> None:
+        from pyspark.errors import AnalysisException
+
+        deduped = batch.dropDuplicates(key_cols)
+        try:
+            existing = read_target(batch.sparkSession).select(*key_cols)
+            deduped = deduped.join(existing, on=key_cols, how="left_anti")
+        except AnalysisException as e:
+            if not _is_target_absent(e):
+                raise
+        append(deduped)
+
+    return upsert
 
 
 def keyed_upsert_foreach_batch(
     target_path: str, key_cols: list[str]
 ) -> Callable[[DataFrame, int], None]:
-    """First-write-wins upsert into a parquet directory: each batch is
-    de-duplicated within itself, then anti-joined against the existing
-    target keys before append — the reference's ON CONFLICT DO NOTHING,
-    batch-at-a-time instead of row-at-a-time.
+    """First-write-wins upsert into a parquet directory.
 
     For very large targets, key reconciliation belongs in the streaming
     state (``dedup_trades``) where it is O(batch); this sink-side check
     re-reads only the target's key columns (column-pruned scan).
     """
-
-    def upsert(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        deduped = batch.dropDuplicates(key_cols)
-        try:
-            # Works for any filesystem URI (s3://, hdfs://, file:/ …) —
-            # a driver-local os.path probe would silently skip the
-            # anti-join everywhere but bare local paths.
-            existing = spark.read.parquet(target_path).select(*key_cols)
-            deduped = deduped.join(existing, on=key_cols, how="left_anti")
-        except AnalysisException as e:
-            # Only the target-absent bootstrap case may skip the
-            # anti-join; schema/column errors re-raise so the
-            # checkpoint retries instead of appending duplicates.
-            if not _is_target_absent(e):
-                raise
-        deduped.write.mode("append").parquet(target_path)
-
-    return upsert
+    return _first_write_wins(
+        key_cols,
+        # Works for any filesystem URI (s3://, hdfs://, file:/ …) — a
+        # driver-local os.path probe would silently skip the anti-join
+        # everywhere but bare local paths.
+        lambda spark: spark.read.parquet(target_path),
+        lambda df: df.write.mode("append").parquet(target_path),
+    )
 
 
 def jdbc_upsert_foreach_batch(
@@ -104,7 +111,7 @@ def jdbc_upsert_foreach_batch(
     batch-level first-write-wins against the remote table — read back
     only the key columns, anti-join, append. Requires a JDBC driver jar
     on the classpath; untestable in this environment (no database), but
-    the control flow is identical to the parquet upsert above.
+    it shares its control flow with the parquet upsert.
 
     True ``ON CONFLICT`` pushdown would need database-specific SQL in a
     staging-table dance; prefer ``dedup_trades`` upstream so the sink
@@ -112,31 +119,18 @@ def jdbc_upsert_foreach_batch(
     """
     properties = properties or {}
 
-    def upsert(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.errors import AnalysisException
+    def read_target(spark: SparkSession) -> DataFrame:
+        return (
+            spark.read.format("jdbc")
+            .option("url", url)
+            .option("dbtable", table)
+            .options(**properties)
+            .load()
+        )
 
-        spark = batch.sparkSession
-        deduped = batch.dropDuplicates(key_cols)
-        try:
-            existing = (
-                spark.read.format("jdbc")
-                .option("url", url)
-                .option("dbtable", table)
-                .options(**properties)
-                .load()
-                .select(*key_cols)
-            )
-            deduped = deduped.join(existing, on=key_cols, how="left_anti")
-        except AnalysisException as e:
-            # Table absent on first batch -> plain append. Anything
-            # else (schema mismatch; transient network/auth surfaces as
-            # non-AnalysisException anyway) propagates so the
-            # checkpoint retries the batch instead of silently
-            # appending duplicates.
-            if not _is_target_absent(e):
-                raise
+    def append(df: DataFrame) -> None:
         (
-            deduped.write.format("jdbc")
+            df.write.format("jdbc")
             .option("url", url)
             .option("dbtable", table)
             .options(**properties)
@@ -144,7 +138,7 @@ def jdbc_upsert_foreach_batch(
             .save()
         )
 
-    return upsert
+    return _first_write_wins(key_cols, read_target, append)
 
 
 def start_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
@@ -155,14 +149,3 @@ def start_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
         .outputMode(output_mode)
         .start()
     )
-
-
-def alert_console_foreach_batch(threshold_status: str = "Break") -> Callable:
-    """W5 side-effect sink shape (dashboard alert banner equivalent)."""
-
-    def alert(batch: DataFrame, epoch_id: int) -> None:
-        n = batch.filter(F.col("status").contains(threshold_status)).count()
-        if n:
-            print(f"[ALERT epoch={epoch_id}] {n} break trades detected")
-
-    return alert

@@ -7,6 +7,14 @@ carries per-window partial aggregates, each micro-batch touches only
 the windows its rows hit, and the watermark both bounds state and
 defines late-data semantics (the reference has none: its LIMIT-500
 snapshot silently forgets old rows, SURVEY.md W3).
+
+Watermark rule: every windowed ``*_stream`` aggregation here bounds its
+state by the event-time watermark on ``timestamp`` (``hll_distinct_stream``
+needs none: its state is bounded by construction). The watermark is
+declared once per query: a function whose input already carries one
+(e.g. the output of ``ingest.dedup_trades``) keeps it, and a function
+over a raw stream declares ``ingest.WATERMARK``. No function takes a
+watermark argument.
 """
 
 from __future__ import annotations
@@ -14,20 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from real_time_streaming_system_with_apache_kafka_spark.streaming.ingest import (
+    _ensure_watermark,
+)
 
-def minute_activity_stream(
-    trades: DataFrame, watermark: str | None = None
-) -> DataFrame:
+
+def minute_activity_stream(trades: DataFrame) -> DataFrame:
     """W1 streaming twin of ``operators/windows.py::minute_activity``:
-    per-minute trade count + notional sum (dashboard.py:236-243).
-
-    Pass ``watermark=None`` when the input already carries one (e.g.
-    downstream of ``dedup_trades``) — Spark disallows redefining it.
-    """
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
+    per-minute trade count + notional sum (dashboard.py:236-243)."""
     return (
-        trades.groupBy(F.window(F.col("timestamp"), "1 minute").alias("w"))
+        _ensure_watermark(trades).groupBy(F.window(F.col("timestamp"), "1 minute").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_trades"),
             F.sum(F.col("notional_value").cast("decimal(38,6)"))
@@ -43,9 +47,7 @@ def minute_activity_stream(
     )
 
 
-def minute_partials_stream(
-    trades: DataFrame, watermark: str | None = None
-) -> DataFrame:
+def minute_partials_stream(trades: DataFrame) -> DataFrame:
     """Mergeable minute partials — the streaming counterpart of
     ``w9_cascaded_rollup``: emits the EXACT decimal sum (not the
     presentation double) plus the count, so hour/day rollups
@@ -53,10 +55,8 @@ def minute_partials_stream(
     raw events. This is the continuous-aggregate maintenance contract:
     the materialized level keeps mergeable state; presentation values
     (doubles, averages) derive at query time."""
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
     return (
-        trades.groupBy(F.window(F.col("timestamp"), "1 minute").alias("w"))
+        _ensure_watermark(trades).groupBy(F.window(F.col("timestamp"), "1 minute").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_trades"),
             F.sum(F.col("notional_value").cast("decimal(38,6)")).alias("sv_dec"),
@@ -65,9 +65,7 @@ def minute_partials_stream(
     )
 
 
-def minute_distinct_stream(
-    trades: DataFrame, watermark: str | None = "2 minutes"
-) -> DataFrame:
+def minute_distinct_stream(trades: DataFrame) -> DataFrame:
     """Per-minute DISTINCT counterparty count — the streaming form of
     COUNT(DISTINCT), which streaming aggregations do not support
     directly. Two chained stateful operators (supported since Spark
@@ -85,9 +83,7 @@ def minute_distinct_stream(
 
     Stream/batch equivalence pinned in tests/test_streaming.py against
     the raw wire's distinct (minute, counterparty) pairs."""
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
-    per = trades.select(
+    per = _ensure_watermark(trades).select(
         F.window(F.col("timestamp"), "1 minute").alias("w"),
         "counterparty",
     ).dropDuplicates(["w", "counterparty"])
@@ -111,17 +107,13 @@ def break_alerts(trades: DataFrame) -> DataFrame:
     )
 
 
-def session_window_stream(
-    trades: DataFrame, gap: str = "30 minutes", watermark: str | None = "2 minutes"
-) -> DataFrame:
+def session_window_stream(trades: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """W6 gap-fill: native ``session_window`` sessions — dynamic-length
     windows that close after ``gap`` of silence per key, state bounded
     by the watermark. The batch twin (lag + gap cumsum over the events
     table) is ``operators/analytics.py::sessionize_events``."""
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
     return (
-        trades.groupBy(
+        _ensure_watermark(trades).groupBy(
             F.session_window(F.col("timestamp"), gap).alias("w"),
             F.col("counterparty"),
         )
@@ -141,18 +133,7 @@ def session_window_stream(
     )
 
 
-def venue_distribution_stream(
-    trades: DataFrame, watermark: str | None = "2 minutes"
-) -> DataFrame:
-    """A6-style frequency table, incremental (dashboard.py:181-182)."""
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
-    return trades.groupBy("settlement_venue").agg(F.count(F.lit(1)).alias("n"))
-
-
-def minute_checksum_stream(
-    trades: DataFrame, watermark: str | None = "2 minutes"
-) -> DataFrame:
+def minute_checksum_stream(trades: DataFrame) -> DataFrame:
     """Per-minute order-insensitive stream fingerprint — the streaming
     twin of ``operators/extras.py::reconcile_checksum``: each row
     hashes to a 60-bit integer (md5 over trade_id, engine-portable)
@@ -163,13 +144,11 @@ def minute_checksum_stream(
     (compare window signatures computed downstream; any lost or
     duplicated row flips the sum). Pure windowed aggregation: one
     stateful operator, watermark-bounded state."""
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
     rowhash = F.conv(F.substring(F.md5(F.col("trade_id")), 1, 15), 16, 10).cast(
         "decimal(38,0)"
     )
     return (
-        trades.groupBy(F.window(F.col("timestamp"), "1 minute").alias("w"))
+        _ensure_watermark(trades).groupBy(F.window(F.col("timestamp"), "1 minute").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(rowhash).cast("string").alias("hash_sum"),
@@ -178,9 +157,7 @@ def minute_checksum_stream(
     )
 
 
-def ohlc_bars_stream(
-    trades: DataFrame, watermark: str | None = "2 minutes"
-) -> DataFrame:
+def ohlc_bars_stream(trades: DataFrame) -> DataFrame:
     """Per-minute OHLC price bars per instrument — the streaming twin
     of ``operators/timeseries.py::ts_ohlc_bars``: open/close are
     arg-min/arg-max over the TOTAL order (timestamp, trade_id), so the
@@ -190,11 +167,9 @@ def ohlc_bars_stream(
     incremental-aggregation-safe: each micro-batch folds into the
     stored (key, value) partial, watermark-bounded state per
     (instrument, window)."""
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
     ordkey = F.struct(F.col("timestamp"), F.col("trade_id"))
     return (
-        trades.groupBy(
+        _ensure_watermark(trades).groupBy(
             "instrument", F.window(F.col("timestamp"), "1 minute").alias("w")
         )
         .agg(
@@ -220,9 +195,7 @@ def ohlc_bars_stream(
     )
 
 
-def vwap_bars_stream(
-    trades: DataFrame, watermark: str | None = "2 minutes"
-) -> DataFrame:
+def vwap_bars_stream(trades: DataFrame) -> DataFrame:
     """Per-minute VWAP per instrument — the streaming twin of
     ``operators/timeseries.py::ts_vwap_bars`` on the trade wire
     schema: volume-weighted average price from two exact decimal sums
@@ -234,11 +207,9 @@ def vwap_bars_stream(
     dashboard refreshes, maintained incrementally instead of the
     reference's full pandas recompute per poll (dashboard.py:236-303).
     """
-    if watermark is not None:
-        trades = trades.withWatermark("timestamp", watermark)
     pq = (F.col("price") * F.col("quantity")).cast("decimal(38,8)")
     return (
-        trades.groupBy(
+        _ensure_watermark(trades).groupBy(
             "instrument", F.window(F.col("timestamp"), "1 minute").alias("w")
         )
         .agg(

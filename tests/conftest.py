@@ -10,7 +10,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_session("rtss_tests", cpus="8")
+    s = get_session("rtss_tests")
     yield s
 
 

@@ -179,8 +179,7 @@ def test_streaming_pipeline_counts_match_batch_funnel(spark, sf_smoke, tmp_path)
         docdedup.filter_exact_duplicates(
             docdedup.gate_quality(
                 docdedup.read_document_stream_from_json_dir(spark, str(path))
-            ),
-            watermark="10 minutes",
+            )
         ),
         "funnel_dedup",
     )

@@ -73,7 +73,7 @@ def test_late_rows_dropped_by_watermark(spark, tmp_path):
         msg("a1", "2026-01-05T09:30:00") + "\n" + msg("a2", "2026-01-05T09:40:00") + "\n"
     )
     stream = ingest.read_trade_stream_from_json_dir(spark, str(wire))
-    agg = windowed.minute_activity_stream(stream, watermark="2 minutes")
+    agg = windowed.minute_activity_stream(stream)
     q = sinks.start_memory_sink(agg, "late_test", output_mode="update")
     q.processAllAvailable()
     # Batch 2: a1-window late row (09:30, behind watermark) + on-time row.

@@ -6,6 +6,7 @@ partitionings)."""
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import hashlib
 
 import pytest
@@ -174,6 +175,9 @@ def test_plan_build_is_cheap(spark, monkeypatch):
     per column), and makes few py4j round trips."""
     sc = spark.sparkContext
     generator.trades(spark, 1_000)  # warm the JVM-side function registry
+    # Collect earlier tests' garbage now: py4j releases each collected
+    # JVM reference with a call of its own, which would be counted below.
+    gc.collect()
     client = sc._gateway._gateway_client
     calls = []
     send = client.send_command

@@ -86,7 +86,7 @@ def test_dedup_state_is_evicted_by_watermark(spark, tmp_path):
     # Three batches, each far beyond the previous watermark window —
     # written sequentially so the file source can't reorder them.
     stream = ingest.read_trade_stream_from_json_dir(spark, str(wire))
-    deduped = ingest.dedup_trades(stream, watermark="2 minutes")
+    deduped = ingest.dedup_trades(stream)
     q = sinks.start_memory_sink(deduped, "evict_test")
     for i, hour in enumerate(["09", "11", "13"]):
         (wire / f"b{i}.txt").write_text(

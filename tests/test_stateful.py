@@ -114,72 +114,3 @@ def test_token_budget_gate_state_across_batches(spark, tmp_path):
         3: ("de", 400, 0),
         12: ("de", 400, 400),
     }
-
-
-def test_state_v2_venue_totals_across_batches(spark, tmp_path):
-    """transformWithStateInPandas (state store v2): per-venue running
-    totals must persist across micro-batches and converge to the
-    batch-mode aggregate — same contract the applyInPandasWithState
-    tracker satisfies, on the successor API.
-
-    Environment-gated like Kafka e2e: the state-v2 protocol speaks
-    protobuf between the JVM and the Python driver worker, and this
-    container ships no google.protobuf — the operator itself is plan-
-    checked below and runs wherever protobuf is installed."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable: transformWithStateInPandas"
-                    " driver worker cannot start in this container")
-    from real_time_streaming_system_with_apache_kafka_spark.streaming import stateful_v2
-
-    wire = tmp_path / "wire_v2"
-    base = generator.trades(spark, 1_000)
-    ingest.to_wire_json(base).coalesce(2).write.mode("overwrite").text(str(wire))
-
-    stream = ingest.read_trade_stream_from_json_dir(
-        spark, str(wire), max_files_per_trigger=1
-    )
-    tracked = stateful_v2.venue_totals(stream)
-    q = sinks.start_memory_sink(tracked, "venue_v2", output_mode="append")
-    q.processAllAvailable()
-    q.stop()
-
-    out = spark.sql("SELECT * FROM venue_v2").collect()
-    assert len(out) > 0
-    want = {
-        r["venue"]: (r["n"], float(r["qty"]))
-        for r in base.groupBy(F.col("settlement_venue").alias("venue"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("quantity").cast("double")).alias("qty"),
-        )
-        .collect()
-    }
-    got: dict[str, tuple[int, float]] = {}
-    emissions: dict[str, int] = {}
-    for r in out:
-        v = r["venue"]
-        emissions[v] = emissions.get(v, 0) + 1
-        prev = got.get(v, (0, 0.0))
-        got[v] = (max(prev[0], r["cum_trades"]), max(prev[1], r["cum_quantity"]))
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v][0] == want[v][0]
-        assert got[v][1] == pytest.approx(want[v][1], rel=1e-9)
-    assert max(emissions.values()) == 2  # state survived into batch 2
-
-
-def test_state_v2_builder_constructs(spark, tmp_path):
-    """Plan construction for the state-v2 operator must succeed even
-    where the protobuf runtime is missing (analysis is JVM-side): the
-    streaming plan resolves with the declared output schema."""
-    from real_time_streaming_system_with_apache_kafka_spark.streaming import stateful_v2
-
-    wire = tmp_path / "wire_v2c"
-    base = generator.trades(spark, 10)
-    ingest.to_wire_json(base).coalesce(1).write.mode("overwrite").text(str(wire))
-    stream = ingest.read_trade_stream_from_json_dir(spark, str(wire))
-    out = stateful_v2.venue_totals(stream)
-    assert out.isStreaming
-    assert out.schema == stateful_v2.OUTPUT_SCHEMA

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -126,7 +128,7 @@ def test_session_window_stream(spark, wire_dir):
     reconcile with the input."""
     path, n_base, n_dup = wire_dir
     stream = ingest.read_trade_stream_from_json_dir(spark, path)
-    sess = windowed.session_window_stream(stream, gap="10 minutes", watermark="2 minutes")
+    sess = windowed.session_window_stream(stream, gap="10 minutes")
     out = _drain(sess, "sessions", mode="complete")
     rows = out.collect()
     assert rows
@@ -162,6 +164,35 @@ def test_keyed_upsert_sink_on_conflict_do_nothing(spark, wire_dir, tmp_path):
     stored = spark.read.parquet(target)
     assert stored.count() == n_base
     assert stored.select("trade_id").distinct().count() == n_base
+
+
+class _AnalysisError(Exception):
+    """An AnalysisException as the sink sees it: Spark 4 names the error
+    class through ``getCondition()``; without one the sink falls back to
+    the message."""
+
+    def __init__(self, message, condition=None):
+        super().__init__(message)
+        if condition is not None:
+            self.getCondition = lambda: condition
+
+
+@pytest.mark.parametrize(
+    "exc, absent",
+    [
+        (_AnalysisError("", "PATH_NOT_FOUND"), True),
+        (_AnalysisError("", "TABLE_OR_VIEW_NOT_FOUND"), True),
+        (_AnalysisError("", "UNABLE_TO_INFER_SCHEMA"), True),
+        # The target exists with another schema: the class decides, not
+        # the message, so the sink re-raises instead of appending.
+        (_AnalysisError("Path does not exist", "UNRESOLVED_COLUMN.WITH_SUGGESTION"), False),
+        (_AnalysisError("Path does not exist: file:/t/trades"), True),
+        (_AnalysisError("cannot resolve 'trade_id' given input columns"), False),
+    ],
+    ids=["path", "table", "empty_dir", "schema_mismatch", "legacy_absent", "legacy_other"],
+)
+def test_upsert_skips_anti_join_only_for_absent_target(exc, absent):
+    assert sinks._is_target_absent(exc) is absent
 
 
 def test_parquet_append_exactly_once(spark, wire_dir, tmp_path):
@@ -224,6 +255,62 @@ def test_multibatch_soak(spark, tmp_path):
     assert all(r["sum_notional"] == 100.0 * r["n_trades"] for r in rows)
 
 
+def test_raw_stream_minute_activity_append_mode(spark, tmp_path):
+    """Over a raw, un-watermarked stream the windowed aggregation
+    declares the watermark itself, so it runs in append mode and emits
+    each window exactly once, after the watermark passes its end: the
+    closed windows equal the batch recompute, the open ones are held."""
+    wire = tmp_path / "raw"
+    wire.mkdir()
+    now = time.time()
+    # Three files hours apart, each spanning two minutes: a file's own
+    # rows never close its windows, the next file's rows close them.
+    for i, hour in enumerate(["09", "11", "13"]):
+        lines = [
+            json.dumps(
+                {
+                    "trade_id": f"h{hour}k{k:02d}",
+                    "notional_value": 10.0 + k,
+                    "status": "Settled",
+                    "timestamp": f"2026-01-05T{hour}:{k // 20:02d}:{k % 20 * 3:02d}",
+                }
+            )
+            for k in range(40)
+        ]
+        f = wire / f"h{hour}.txt"
+        f.write_text("\n".join(lines) + "\n")
+        os.utime(f, (now - 3 + i, now - 3 + i))  # the file source reads in mtime order
+    stream = ingest.read_trade_stream_from_json_dir(spark, str(wire), max_files_per_trigger=1)
+    got = _drain(windowed.minute_activity_stream(stream), "raw_minute_append").collect()
+
+    batch = windowed.minute_activity_stream(ingest.parse_wire(spark.read.text(str(wire))))
+    want = batch.filter(F.col("window_start") < "2026-01-05 13:00:00").collect()
+    assert len(want) == 4
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+@pytest.mark.parametrize(
+    "aggregate",
+    [
+        windowed.minute_activity_stream,
+        windowed.minute_partials_stream,
+        windowed.minute_distinct_stream,
+        windowed.session_window_stream,
+        windowed.minute_checksum_stream,
+        windowed.ohlc_bars_stream,
+        windowed.vwap_bars_stream,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_dedup_then_window_declares_one_watermark(spark, wire_dir, aggregate):
+    """Downstream of ``dedup_trades`` a windowed aggregation keeps the
+    watermark dedup declared instead of declaring a second one."""
+    path, _, _ = wire_dir
+    stream = ingest.read_trade_stream_from_json_dir(spark, path)
+    plan = aggregate(ingest.dedup_trades(stream))._jdf.queryExecution().analyzed().toString()
+    assert len(re.findall(r"\bEventTimeWatermark\b", plan)) == 1
+
+
 def test_kafka_builders_construct(spark):
     """Plan-level check only (no broker/jar in this environment)."""
     from real_time_streaming_system_with_apache_kafka_spark.streaming import kafka_io
@@ -243,11 +330,11 @@ def test_stream_batch_ohlc_equivalence(spark, wire_dir):
     path, n_base, n_dup = wire_dir
     stream = ingest.read_trade_stream_from_json_dir(spark, path)
     got = _drain(
-        windowed.ohlc_bars_stream(stream, watermark=None), "ohlc_stream",
+        windowed.ohlc_bars_stream(stream), "ohlc_stream",
         mode="complete",
     )
     batch = ingest.parse_wire(spark.read.text(path))
-    want = windowed.ohlc_bars_stream(batch, watermark=None)
+    want = windowed.ohlc_bars_stream(batch)
     assert sorted(map(tuple, got.collect()), key=str) == sorted(
         map(tuple, want.collect()), key=str
     )
@@ -565,19 +652,19 @@ def test_stream_batch_vwap_equivalence(spark, wire_dir):
     path, n_base, n_dup = wire_dir
     stream = ingest.read_trade_stream_from_json_dir(spark, path)
     got = _drain(
-        windowed.vwap_bars_stream(stream, watermark=None),
+        windowed.vwap_bars_stream(stream),
         "vwap_stream",
         mode="complete",
     ).collect()
     batch = ingest.parse_wire(spark.read.text(path))
-    want = windowed.vwap_bars_stream(batch, watermark=None).collect()
+    want = windowed.vwap_bars_stream(batch).collect()
     assert sorted(map(tuple, got), key=str) == sorted(
         map(tuple, want), key=str
     )
     assert len(got) > 1
     bars = {
         (r["instrument"], r["window_start"]): r
-        for r in windowed.ohlc_bars_stream(batch, watermark=None).collect()
+        for r in windowed.ohlc_bars_stream(batch).collect()
     }
     for r in got:
         o = bars[(r["instrument"], r["window_start"])]

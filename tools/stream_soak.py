@@ -71,7 +71,6 @@ from real_time_streaming_system_with_apache_kafka_spark.streaming import (
 # keys and ~3 open minute-windows in state at ANY wall-clock rate —
 # large enough to measure, small enough to show the plateau quickly.
 MEAN_INTERVAL_MS = 10
-WATERMARK = "2 minutes"
 DUP_EVERY_N = 20
 
 
@@ -126,8 +125,8 @@ def main() -> None:
             mean_interval_ms=MEAN_INTERVAL_MS,
         )
 
-    deduped = ingest.dedup_trades(mk_stream(), watermark=WATERMARK)
-    per_minute = windowed.minute_activity_stream(deduped, watermark=None)
+    deduped = ingest.dedup_trades(mk_stream())
+    per_minute = windowed.minute_activity_stream(deduped)
     hll = windowed.hll_distinct_stream(mk_stream())
     breaks = windowed.break_alerts(mk_stream())
     ssjoin = enrich.join_breaks_to_settlements(
@@ -273,7 +272,7 @@ def main() -> None:
         "rows_processed": int(rows_in),
         "achieved_rate_rows_per_s": round(rows_in / max(1e-9, time.monotonic() - t0)),
         "state_store": "rocksdb",
-        "watermark": WATERMARK,
+        "watermark": ingest.WATERMARK,
         "trigger_interval_s": args.trigger,
         "join_lag": args.join_lag,
         "shuffle_partitions": args.shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions")),
